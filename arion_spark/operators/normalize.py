@@ -159,8 +159,8 @@ def watermark_udf(
       instead of a per-character list rebuild).  Per-row is DELIBERATE —
       a fully vectorized utf-32 twin of the ASCII pass (uint32 codepoint
       view, same overlay index math, unique-codepoint isalnum lookup)
-      was built and measured SLOWER on 2026-08-18
-      (tools/bench_watermark_u32.py): 0.6-0.7× on standard, 0.1-0.2× on
+      was built and measured SLOWER on 2026-08-18 (BASELINE.md,
+      "Negative results"): 0.6-0.7× on standard, 0.1-0.2× on
       adaptive, across 80/1.2k/6k-char rows — CPython's str slicing and
       ``str.isalnum`` are already C-speed, while the utf-32 path pays
       encode + np.unique + searchsorted over 4-byte codepoints.  The

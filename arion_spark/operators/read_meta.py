@@ -52,8 +52,8 @@ def named_scalar(text: Column, name: str) -> Column:
     Deliberately one regexp_extract per field: a staged single-pass
     variant (one ``regexp_extract_all`` of all markers into
     array<struct<k,v>>, then per-field array filters) was built and
-    MEASURED 12× SLOWER (2026-08-17, tools/bench_readmeta.py: 17.1 s vs
-    1.4 s at 2M rows × 8 fields) — higher-order array lambdas
+    MEASURED 12× SLOWER (2026-08-17: 17.1 s vs 1.4 s at 2M rows × 8
+    fields; BASELINE.md, "Negative results") — higher-order array lambdas
     (transform/filter) are interpreted per element, while per-field
     Java regex stays inside whole-stage codegen.  Java regex is not the
     bottleneck here; interpreted lambdas are."""

@@ -229,30 +229,14 @@ class AnnIndexMaintainer(CommitLog):
             _legacy_layout={"dim": dim, "n_planes": 6}, dim=dim, n_planes=n_planes
         )
 
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return
-        spark = batch_df.sparkSession
-        d = f"{self.table_dir}/index/batch={batch_id:012d}"
-        (
-            batch_df.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("cv"),
-                srp_bucket(F.col("embedding"), self.dim, self.n_planes).alias(
-                    "bucket"
-                ),
-            )
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(d)
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
+        index = batch_df.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("cv"),
+            srp_bucket(F.col("embedding"), self.dim, self.n_planes).alias("bucket"),
         )
-        n = (
-            spark.read.schema(self._IDX).option("basePath", d).parquet(d).count()
-        )
-        self._write_marker(batch_id, {"batch_id": batch_id, "n_vectors": n})
-
-    def foreach_batch(self):
-        return lambda df, bid: self.process(df, bid)
+        st = self._write_table(index, "index", batch_id, partition_by=["bucket"])
+        return {"n_vectors": st["rows"]}
 
     def compact(self, spark: SparkSession) -> dict:
         return self._fold_tables(
@@ -324,7 +308,7 @@ def run_ann_stream(
     max_files_per_trigger: int = 1,
     recall_sample: int = 4,
 ) -> tuple[StreamingQuery, MergeSink]:
-    sink = MergeSink(out_dir, keys=("query_id", "rank"), stats="minimal")
+    sink = MergeSink(out_dir, keys=("query_id", "rank"))
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if sink.is_committed(batch_id):

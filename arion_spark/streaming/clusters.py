@@ -9,7 +9,7 @@ across a mid-stream restart (tested).
 
 Per micro-batch (ClusterMaintainer.process):
 
-1. **Admission machinery reused** — DedupGuard._admit writes the
+1. **Admission machinery reused** — DedupGuard._write_batch writes the
    docs/buckets index and verifies within-batch + vs-history candidate
    pairs exactly as the batch pipeline does (same LSH banding, same
    Jaccard expression, same threshold); the ``_materialize_pairs`` hook
@@ -50,18 +50,16 @@ dup_clusters does in batch.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from arion_spark.functions import dedup
+from arion_spark.streaming.commitlog import parquet_stats
 from arion_spark.streaming.dedup import DedupGuard, read_doc_stream
 from arion_spark.streaming.sink import MergeSink
 
 _PAIRS = "id_a long, id_b long"
-_MERGES = "old_label long, new_label long"
 _CLUSTERS = "doc_id long, cluster_id long"
 
 
@@ -78,9 +76,7 @@ class ClusterMaintainer(DedupGuard):
             exact_fast_path=False,   # exact dups must still pair up
             bp_len=bp_len,
         )
-        self.clusters = MergeSink(
-            f"{table_dir}/clusters", keys=("doc_id",), stats="minimal"
-        )
+        self.clusters = MergeSink(f"{table_dir}/clusters", keys=("doc_id",))
 
     _SCHEMAS = {**DedupGuard._SCHEMAS, "pairs": _PAIRS}
 
@@ -90,35 +86,28 @@ class ClusterMaintainer(DedupGuard):
         """Persist the verified pair set (the cluster edges) as part of
         the batch's index dirs; admission then re-reads the (narrow)
         parquet instead of re-running the verification plan."""
-        d = f"{self.table_dir}/pairs/batch={batch_id:012d}"
-        pairs.write.mode("overwrite").parquet(d)
-        return spark.read.schema(_PAIRS).parquet(d)
+        self._write_table(pairs, "pairs", batch_id)
+        return spark.read.schema(_PAIRS).parquet(self._batch_dir("pairs", batch_id))
 
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
         spark = batch_df.sparkSession
-        marker = self._admit(batch_df, batch_id)  # docs/buckets/kept/pairs
-        mdir = f"{self.table_dir}/merges/batch={batch_id:012d}"
+        marker = super()._write_batch(batch_df, batch_id)  # docs/buckets/kept/pairs
+        mdir = self._batch_dir("merges", batch_id)
         if not self.clusters.is_committed(batch_id):
             delta, merges = self._cluster_delta(spark, batch_id)
-            merges.write.mode("overwrite").parquet(mdir)
+            self._write_table(merges, "merges", batch_id)
             self.clusters.process(delta, batch_id)
         # crash-replay path: the nested sink already committed — the
         # original merges dir survives (overwrite above didn't run), so
         # lineage stays accurate; only the outer marker is healed.
-        n_merges = (
-            spark.read.schema(_MERGES).parquet(mdir).count()
-            if os.path.isdir(mdir)
-            else 0
-        )
         cmarker = next(
             c for c in self.clusters.lineage() if c["batch_id"] == batch_id
         )
         marker.update(
-            n_merge_events=n_merges, n_cluster_delta_rows=cmarker["rows"]
+            n_merge_events=parquet_stats(mdir)["rows"],
+            n_cluster_delta_rows=cmarker["rows"],
         )
-        self._write_marker(batch_id, marker)  # single atomic commit point
+        return marker
 
     # -- incremental merge -----------------------------------------------------
 

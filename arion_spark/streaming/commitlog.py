@@ -14,8 +14,16 @@ admission guards) follows the same exactly-once recipe:
   then vacuum folded dirs while KEEPING commit markers so replay
   no-ops survive.
 
-This module is that recipe, once.  Sinks mix in :class:`CommitLog` and
-call :meth:`_fold_tables` / :meth:`_vacuum_tables` for maintenance.
+This module is that recipe, once.  :meth:`CommitLog.process` is the
+one foreachBatch body: skip a committed id, run the sink's
+:meth:`~CommitLog._write_batch` step, write one marker.  Sinks supply
+only the write plan and their own marker fields; the shared fields
+(``batch_id``, per-table ``tables`` rows/bytes/files, ``bytes_written``,
+``write_ms``) come from the committed part files, not from extra Spark
+actions.  Row counts of stages that never reach disk (rows dropped
+before the write) come from ``pyspark.sql.Observation`` metrics on the
+written plan — see :func:`observed_count`.  Sinks call
+:meth:`_fold_tables` / :meth:`_vacuum_tables` for maintenance.
 """
 
 from __future__ import annotations
@@ -23,10 +31,47 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+def parquet_stats(path: str) -> dict:
+    """Rows (parquet footers), bytes and file count of the part files
+    under ``path`` — exact under task retries, since only committed
+    files remain, and free: no Spark job."""
+    rows = nbytes = files = 0
+    for root, _, names in os.walk(path):
+        for name in names:
+            if name.endswith(".parquet"):
+                f = os.path.join(root, name)
+                rows += pq.read_metadata(f).num_rows
+                nbytes += os.path.getsize(f)
+                files += 1
+    return {"rows": rows, "bytes": nbytes, "files": files}
+
+
+def observe_count(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row-count observation attached; read it with
+    :func:`observed_count` after the write that runs ``df``."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def observed_count(obs: Observation, df: DataFrame) -> int:
+    """Rows ``obs`` counted on ``df`` during the batch's writes.
+
+    When a sibling stage comes back empty, adaptive execution replaces
+    the join or union above it with an empty relation, and an observed
+    subtree under it drops out of the final plan: Spark then completes
+    the observation with an empty row.  Only in that case is ``df``
+    counted directly."""
+    if obs._jo.getRow().length() == 0:
+        return df.count()
+    return obs.get["n"]
 
 
 class CommitLog:
@@ -59,6 +104,56 @@ class CommitLog:
             with open(self._commit_path(bid)) as f:
                 out.append(json.load(f))
         return out
+
+    # -- the shared write path ----------------------------------------------
+
+    def process(
+        self, batch_df: DataFrame, batch_id: int, extra: dict | None = None
+    ) -> None:
+        """foreachBatch body.  Idempotent: committed batch ids are no-ops.
+        Otherwise the sink's write step runs, then ONE marker — shared
+        fields, the step's own fields, then ``extra`` (caller telemetry,
+        e.g. serving recall) — is written as the atomic commit point."""
+        if self.is_committed(batch_id):
+            return
+        self._tables: dict[str, dict] = {}
+        t0 = time.perf_counter()
+        fields = self._write_batch(batch_df, batch_id)
+        marker = {
+            "batch_id": batch_id,
+            **fields,
+            "tables": self._tables,
+            "bytes_written": sum(t["bytes"] for t in self._tables.values()),
+            "write_ms": round(1000 * (time.perf_counter() - t0), 1),
+        }
+        marker.update(extra or {})
+        self._write_marker(batch_id, marker)
+
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
+        """The sink's write step: write every data dir of the batch via
+        :meth:`_write_table` and return the sink's own marker fields."""
+        raise NotImplementedError
+
+    def _batch_dir(self, sub: str, batch_id: int) -> str:
+        return f"{self.table_dir}/{sub}/batch={batch_id:012d}"
+
+    def _write_table(
+        self,
+        df: DataFrame,
+        sub: str,
+        batch_id: int,
+        partition_by: list[str] | None = None,
+    ) -> dict:
+        """Overwrite one table's batch dir (idempotent under task retry
+        and crash replay) and record its rows/bytes/files for the
+        marker; returns them."""
+        path = self._batch_dir(sub, batch_id)
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(path)
+        self._tables[sub] = parquet_stats(path)
+        return self._tables[sub]
 
     def _write_marker(self, batch_id: int, marker: dict) -> None:
         """The atomic commit point: marker lands only after all data."""

@@ -43,16 +43,16 @@ State layout (the 100 TB design):
   text or hash arrays, ``bp`` pruning skips base directories, and the
   still-incremental tail is bounded by the compaction cadence: probe
   cost = O(corpus × touched_bp/16^bp_len) + O(uncompacted tail), reported
-  per batch in the commit lineage (n_probe_partitions always;
-  n_probe_rows under ``stats="full"`` — the row count is a second
-  action over the pruned index, so it is opt-in).
+  per batch in the commit lineage (n_probe_partitions, and n_probe_rows
+  observed on the probe itself — no second action over the index).
   At cluster scale this table is Iceberg bucketed-by(bucket) so the
   probe becomes a storage-partitioned join (or the index moves into a
   key-value state store); the parquet layout here is the local twin of
   that contract.
 * ``kept/batch=<id>/``    — admitted (doc_id, text).
 * ``_commits/<id>.json``  — written AFTER all three data dirs (atomic
-  rename), carrying per-batch lineage (n_in/n_kept/drop split).
+  rename), carrying per-batch lineage (n_in/n_kept/drop split, rows and
+  bytes per table — CommitLog.process, no extra Spark job).
   Replayed batch ids are no-ops; a crash between data and marker is
   healed by the replay overwriting the orphan dirs — the same
   exactly-once discipline as MergeSink/SketchSink.
@@ -71,14 +71,18 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from arion_spark.functions import dedup
 from arion_spark.functions import text as text_fns
-from arion_spark.streaming.commitlog import CommitLog
+from arion_spark.streaming.commitlog import (
+    CommitLog,
+    observe_count,
+    observed_count,
+)
 
 DOC_SCHEMA = T.StructType(
     [
@@ -162,16 +166,11 @@ class DedupGuard(CommitLog):
         quality_gate: bool = False,
         exact_fast_path: bool = False,
         bp_len: int = 3,
-        stats: str = "minimal",
     ):
         self.table_dir = table_dir
         self.threshold = threshold
         self.quality_gate = quality_gate
         self.exact_fast_path = exact_fast_path
-        # "full" additionally counts the pruned history scan per batch
-        # (n_probe_rows lineage) — a second action over the very probe
-        # I/O the prune bounds, so it is opt-in, not the default
-        self.stats = stats
         if not 1 <= bp_len <= 4:
             raise ValueError(f"bp_len must be 1..4 hex chars, got {bp_len}")
         self.bp_len = bp_len
@@ -218,41 +217,35 @@ class DedupGuard(CommitLog):
     def vacuum(self) -> int:
         return self._vacuum_tables(list(self._SCHEMAS))
 
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return
-        self._write_marker(batch_id, self._admit(batch_df, batch_id))
-
     def _materialize_pairs(self, spark, batch_id: int, pairs: DataFrame) -> DataFrame:
         """Hook for subclasses that persist the verified near-dup PAIRS
         (ClusterMaintainer): the default guard only needs the rejected
         ids, so the pairs frame passes through untouched."""
         return pairs
 
-    def _admit(self, batch_df: DataFrame, batch_id: int) -> dict:
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
         """One admission batch: write the docs/buckets index, verify
-        within-batch and vs-history candidates, write kept/ — everything
-        EXCEPT the commit marker (returned for the caller to extend and
-        write: the marker stays the single atomic commit point even when
-        a subclass adds work after admission)."""
-        spark = batch_df.sparkSession
-        docs_dir = f"{self.table_dir}/docs/batch={batch_id:012d}"
-        bkt_dir = f"{self.table_dir}/buckets/batch={batch_id:012d}"
-        kept_dir = f"{self.table_dir}/kept/batch={batch_id:012d}"
+        within-batch and vs-history candidates, write kept/, and return
+        the admission lineage for the commit marker.
 
-        src = batch_df.select("doc_id", "text")
-        n_in = src.count()
+        Stage counts cost no Spark job: rows that reach disk (docs =
+        survivors of the gate and the fast path, kept) come from the
+        written footers; rows dropped before the docs write (``n_in``,
+        the quality gate) and the history probe size are observed on the
+        plans the writes run."""
+        spark = batch_df.sparkSession
         ids = self.committed_ids()
 
+        src, obs_in = observe_count(batch_df.select("doc_id", "text"))
+
         # 0a. stateless quality gate — rejects are never "seen"
+        gated = obs_quality = None
         if self.quality_gate:
             feats = text_fns.quality_features(F.col("text"))
-            src = src.where(
+            gated = src.where(
                 (feats["n_tokens"] >= 20) & (feats["alpha_ratio"] >= 0.8)
             )
-            n_quality = src.count()
-        else:
-            n_quality = n_in
+            src, obs_quality = observe_count(gated)
 
         # 0b. exact-dup fast path — md5 probe before the heavy stage
         src = src.withColumn("text_md5", F.md5(F.col("text").cast("binary")))
@@ -272,9 +265,6 @@ class DedupGuard(CommitLog):
                     .distinct()
                 )
                 src = src.join(hist_md5, "text_md5", "left_anti")
-            n_exact = src.count()
-        else:
-            n_exact = n_quality
 
         # 1. materialize the batch's signatures ONCE (heavy plan → disk)
         prep = (
@@ -284,20 +274,28 @@ class DedupGuard(CommitLog):
             .withColumn("buckets", dedup.lsh_buckets(F.col("minhash")))
             .select("doc_id", "text", "text_md5", "hs", "buckets")
         )
-        prep.write.mode("overwrite").parquet(docs_dir)
-        b = spark.read.schema(_DOCS_IDX).parquet(docs_dir)
+        n_exact = self._write_table(prep, "docs", batch_id)["rows"]
+        n_in = observed_count(obs_in, batch_df)
+        n_quality = n_in if gated is None else observed_count(obs_quality, gated)
+        b = spark.read.schema(_DOCS_IDX).parquet(self._batch_dir("docs", batch_id))
 
         # 2. the narrow LSH index rows for this batch — FLAT dir, bp as
         #    a data column sorted first (row-group stats stay tight);
-        #    compaction turns bp into real partition dirs
-        (
+        #    compaction turns bp into real partition dirs.  The touched
+        #    prune cells are observed on this write.
+        obs_bp = Observation()
+        self._write_table(
             b.select("doc_id", F.explode("buckets").alias("bucket"))
             .withColumn("bp", F.substring("bucket", 1, self.bp_len))
-            .sortWithinPartitions("bp", "bucket")
-            .write.mode("overwrite")
-            .parquet(bkt_dir)
+            .observe(obs_bp, F.collect_set("bp").alias("bps"))
+            .sortWithinPartitions("bp", "bucket"),
+            "buckets",
+            batch_id,
         )
-        bb = spark.read.schema(_BUCKET_IDX).parquet(bkt_dir)
+        bps = sorted(obs_bp.get["bps"])
+        bb = spark.read.schema(_BUCKET_IDX).parquet(
+            self._batch_dir("buckets", batch_id)
+        )
 
         # 3. within-batch: later doc rejected by any earlier batch doc
         e = bb.select("doc_id", "bucket")
@@ -316,24 +314,18 @@ class DedupGuard(CommitLog):
 
         # 4. vs history: candidate ids via the narrow bucket index
         #    (batch side broadcast — history is never shuffled), exact
-        #    Jaccard via the SAME jaccard_pairs expression as batch
-        n_probe_rows = None
-        n_probe_parts = 0
-        if ids:
-            bps = [r["bp"] for r in bb.select("bp").distinct().collect()]
-            n_probe_parts = len(bps)
+        #    Jaccard via the SAME jaccard_pairs expression as batch.
+        #    The pruned scan size is THE per-batch scale number for this
+        #    guard (VERDICT r3), observed on the probe.
+        if ids and bps:
             # base leg: touched-cell paths read directly (no 4096-dir
             # listing); the isin filter still prunes the incremental tail
             hist_b = self._read_committed(
                 spark, "buckets", ids, partition_filter={"bp": bps}
             ).where(F.col("bp").isin(bps))
-            # probe-scan size is THE per-batch scale number for this
-            # guard (VERDICT r3) — but counting it is a second action
-            # over the pruned index, so it runs only under stats="full"
-            if self.stats == "full":
-                n_probe_rows = hist_b.count()
+            probe, obs_probe = observe_count(hist_b)
             cand = (
-                hist_b.join(
+                probe.join(
                     F.broadcast(
                         bb.select("bucket", F.col("doc_id").alias("id_b"))
                     ),
@@ -361,11 +353,11 @@ class DedupGuard(CommitLog):
         kept = b.join(rejected.distinct(), "doc_id", "left_anti").select(
             "doc_id", "text"
         )
-        kept.write.mode("overwrite").parquet(kept_dir)
-
-        n_kept = spark.read.schema(_KEPT).parquet(kept_dir).count()
-        marker = {
-            "batch_id": batch_id,
+        n_kept = self._write_table(kept, "kept", batch_id)["rows"]
+        n_probe_rows = None  # no history yet
+        if ids:
+            n_probe_rows = observed_count(obs_probe, hist_b) if bps else 0
+        return {
             "n_in": n_in,
             "n_quality_dropped": n_in - n_quality,
             "n_exact_dropped": n_quality - n_exact,
@@ -373,12 +365,8 @@ class DedupGuard(CommitLog):
             "n_kept": n_kept,
             "n_dropped": n_in - n_kept,
             "n_probe_rows": n_probe_rows,
-            "n_probe_partitions": n_probe_parts,
+            "n_probe_partitions": len(bps) if ids else 0,
         }
-        return marker
-
-    def foreach_batch(self):
-        return lambda df, bid: self.process(df, bid)
 
     # -- read path ----------------------------------------------------------
 

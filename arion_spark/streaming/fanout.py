@@ -58,7 +58,7 @@ from arion_spark.streaming.stateful import (
 class AnalyticsFanout:
     def __init__(self, base_dir: str, kmv_k: int = 64, topk_k: int = 64):
         self.base_dir = base_dir
-        self.chain = MergeSink(f"{base_dir}/chain", stats="minimal")
+        self.chain = MergeSink(f"{base_dir}/chain")
 
         def minute_partial(bdf: DataFrame) -> DataFrame:
             return (
@@ -121,9 +121,6 @@ class AnalyticsFanout:
         for s in self._summaries:
             s.process(written, batch_id)
 
-    def foreach_batch(self):
-        return lambda df, bid: self.process(df, bid)
-
     def committed_consistent(self) -> bool:
         """True iff every store has the same committed batch ids."""
         ids = {int(c["batch_id"]) for c in self.chain.committed_batches()}
@@ -179,7 +176,7 @@ def run_fanout_stream(
     fan = AnalyticsFanout(base_dir)
     query = (
         staged.writeStream.outputMode("append")
-        .foreachBatch(fan.foreach_batch())
+        .foreachBatch(fan.process)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )

@@ -98,7 +98,6 @@ def run_stream_pipeline(
     session_gap_ms: int = 30 * 60 * 1000,
     max_files_per_trigger: int = 1,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    sink_stats: str = "full",
     stream: "DataFrame | None" = None,
 ) -> tuple[StreamingQuery, MergeSink]:
     """Start the streaming chain; returns (query, sink).
@@ -131,10 +130,10 @@ def run_stream_pipeline(
             stream, watermark=watermark, session_gap_ms=session_gap_ms
         )
     staged = apply_stateless_chain(folded, spec)
-    sink = MergeSink(out_dir, stats=sink_stats)
+    sink = MergeSink(out_dir)
     query = (
         staged.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
+        .foreachBatch(sink.process)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )

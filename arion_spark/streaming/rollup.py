@@ -71,12 +71,7 @@ class ContinuousRollup:
     (update-mode re-emissions upsert), hour/day derived at read."""
 
     def __init__(self, table_dir: str):
-        # stats="minimal": the lineage agg of stats="full" expects raw
-        # transcript columns (ts), which minute rows don't carry
-        self.sink = MergeSink(table_dir, keys=("bucket_ts",), stats="minimal")
-
-    def foreach_batch(self):
-        return self.sink.foreach_batch()
+        self.sink = MergeSink(table_dir, keys=("bucket_ts",))
 
     def read_minute(self, spark: SparkSession) -> DataFrame:
         return self.sink.read_merged(spark)
@@ -100,7 +95,7 @@ def run_rollup_stream(
     roll = ContinuousRollup(out_dir)
     query = (
         minute.writeStream.outputMode("update")
-        .foreachBatch(roll.foreach_batch())
+        .foreachBatch(roll.sink.process)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
@@ -150,25 +145,15 @@ class SketchSink(CommitLog):
             rdr = rdr.schema(T.StructType.fromJson(json.loads(marker["schema"])))
         return rdr.parquet(f"{self.table_dir}/state/batch={ids[-1]:012d}")
 
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
         partial = self.partial_fn(batch_df)
         prev = self.read_state(batch_df.sparkSession)
         merged = partial if prev is None else self.merge_fn(prev, partial)
-        state_dir = f"{self.table_dir}/state/batch={batch_id:012d}"
-        merged.write.mode("overwrite").parquet(state_dir)
-        self._write_marker(
-            batch_id,
-            {
-                "batch_id": batch_id,
-                "state_dir": state_dir,
-                "schema": merged.schema.json(),
-            },
-        )
-
-    def foreach_batch(self):
-        return lambda df, bid: self.process(df, bid)
+        self._write_table(merged, "state", batch_id)
+        return {
+            "state_dir": self._batch_dir("state", batch_id),
+            "schema": merged.schema.json(),
+        }
 
 
 # ---------------------------------------------------------------------------
@@ -205,7 +190,7 @@ def run_kmv_stream(
     stream = read_replay_stream(spark, replay_dir, max_files_per_trigger)
     query = (
         stream.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
+        .foreachBatch(sink.process)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
@@ -264,7 +249,7 @@ def run_latency_hist_stream(
     )
     query = (
         firsts.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
+        .foreachBatch(sink.process)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
@@ -303,7 +288,7 @@ def run_topk_stream(
     stream = read_replay_stream(spark, replay_dir, max_files_per_trigger)
     query = (
         stream.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
+        .foreachBatch(sink.process)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )

@@ -11,14 +11,15 @@ would give (SURVEY.md §7 M5 fallback):
   * each micro-batch writes to its own directory ``data/batch=<id>/``
     (overwrite → the write itself is idempotent under task retry),
   * a commit marker ``_commits/<id>.json`` is written AFTER the data
-    (atomic rename), carrying per-batch lineage (row count, key range,
-    min/max event time),
+    (atomic rename), carrying per-batch lineage (row count and bytes
+    from the written files, min/max event time observed on the write —
+    no extra Spark job),
   * a batch id that is already committed is SKIPPED — replays after
     checkpoint restart are no-ops,
   * readers see only committed batches and dedup by key keeping the
     LATEST batch (MERGE upsert semantics).
 
-On a real cluster, swap ``MergeSink.process`` for
+On a real cluster, swap ``MergeSink._write_batch`` for
 ``spark.sql("MERGE INTO ... USING batch_df ON t.conv_id = s.conv_id AND
 t.turn_idx = s.turn_idx WHEN MATCHED THEN UPDATE ... WHEN NOT MATCHED
 THEN INSERT ...")`` — the checkpoint/commit-log discipline is identical.
@@ -28,9 +29,8 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -40,75 +40,47 @@ KEYS = ("conv_id", "turn_idx")
 
 
 class MergeSink(CommitLog):
-    """``stats`` controls per-batch lineage depth: ``"full"`` (default)
-    records row count, event-time range and key count from one agg pass
-    over the written files; ``"minimal"`` records only batch id, file
-    count and a metadata-only row count — saving ~1-2 s of per-batch
-    driver-side jobs (use for throughput benchmarks / latency-critical
-    deployments)."""
+    """Exactly-once upsert sink on ``keys`` (see module docstring).
 
-    def __init__(
-        self, table_dir: str, keys: tuple[str, ...] = KEYS, stats: str = "full"
-    ):
+    The marker carries the shared commit-log fields plus ``rows`` and
+    ``n_partitions`` (from the written part files), the payload
+    ``schema``, and, when the payload has a ``ts`` column, its
+    ``min_ts``/``max_ts`` — observed on the write itself."""
+
+    def __init__(self, table_dir: str, keys: tuple[str, ...] = KEYS):
         self.keys = keys
-        self.stats = stats
         self._init_commit_log(table_dir)
 
     # -- write path -----------------------------------------------------------
 
-    def process(
-        self, batch_df: DataFrame, batch_id: int, extra: dict | None = None
-    ) -> None:
-        """foreachBatch body.  Idempotent: committed batch ids are no-ops.
-        ``extra`` merges caller-supplied telemetry (e.g. serving recall)
-        into the commit marker.
-
-        The micro-batch plan is executed EXACTLY ONCE (the parquet
-        write); lineage stats are computed from the written files, not
-        from ``batch_df`` — every extra action on an uncached
-        foreachBatch DataFrame re-runs the upstream stateful plan
-        (measured 3× batch cost before this was fixed)."""
-        if self.is_committed(batch_id):
-            return
-        data_dir = f"{self.table_dir}/data/batch={batch_id:012d}"
-        batch_df.write.mode("overwrite").parquet(data_dir)
-
-        spark = batch_df.sparkSession
-        n_files = len(
-            [f for f in os.listdir(data_dir) if f.endswith(".parquet")]
-        )
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
+        """The micro-batch plan is executed EXACTLY ONCE (the parquet
+        write) — every extra action on an uncached foreachBatch
+        DataFrame re-runs the upstream stateful plan (measured 3× batch
+        cost before this was fixed), so lineage comes from the write's
+        observation and the written files' footers."""
+        obs = None
+        if "ts" in batch_df.columns:
+            obs = Observation()
+            batch_df = batch_df.observe(
+                obs,
+                F.min("ts").cast("string").alias("min_ts"),
+                F.max("ts").cast("string").alias("max_ts"),
+            )
+        data = self._write_table(batch_df, "data", batch_id)
         marker = {
-            "batch_id": batch_id,
-            "n_partitions": n_files,
-            "data_dir": data_dir,
+            "rows": data["rows"],
+            "n_partitions": data["files"],
+            "data_dir": self._batch_dir("data", batch_id),
             # payload schema travels in the marker so every read path can
             # state it explicitly — a committed ZERO-ROW batch dir has no
             # part files, and schema inference over it would wedge the
             # stream (the write-path hardening alone was not enough)
             "schema": batch_df.schema.json(),
         }
-        # explicit schema: a zero-row batch can write a dir with no
-        # part files, where schema inference would fail the stream
-        written = spark.read.schema(batch_df.schema).parquet(data_dir)
-        if self.stats == "full":
-            st = written.agg(
-                F.count("*").alias("rows"),
-                F.min("ts").cast("string").alias("min_ts"),
-                F.max("ts").cast("string").alias("max_ts"),
-                F.countDistinct(self.keys[0]).alias("n_keys"),
-            ).head()
-            marker.update(
-                rows=st["rows"], min_ts=st["min_ts"], max_ts=st["max_ts"],
-                n_keys=st["n_keys"],
-            )
-        else:
-            # metadata-only count (parquet footers, no data scan)
-            marker["rows"] = written.count()
-        marker.update(extra or {})
-        self._write_marker(batch_id, marker)  # atomic commit point
-
-    def foreach_batch(self):
-        return lambda df, bid: self.process(df, bid)
+        if obs is not None:
+            marker.update(obs.get)
+        return marker
 
     # -- read path (MERGE view) ----------------------------------------------
 
@@ -160,7 +132,7 @@ class MergeSink(CommitLog):
             bsch = self._marker_schema(comp)
             if bsch is not None:
                 rdr = rdr.schema(bsch)
-            base = rdr.parquet(self._compacted_dir(upto))
+            base = rdr.parquet(self._base_dir(upto))
             base = base.drop(*comp["partition_cols"]).withColumn(
                 "_b", F.lit(upto).cast("long")
             )
@@ -258,11 +230,13 @@ class MergeSink(CommitLog):
     # marker lands after via atomic rename, and readers switch to the
     # base only once the marker exists — a crash mid-compaction leaves
     # the incremental view untouched.  Commit markers are NEVER deleted,
-    # so replayed batch ids stay no-ops after vacuum (tested).  This is
-    # the parquet twin of Iceberg's rewrite_data_files + snapshot expiry.
+    # so replayed batch ids stay no-ops after vacuum (tested).  Bases sit
+    # at ``data_base/upto=<id>/``, the layout every commit-log sink uses,
+    # so vacuum is the shared CommitLog._vacuum_tables.  This is the
+    # parquet twin of Iceberg's rewrite_data_files + snapshot expiry.
 
-    def _compacted_dir(self, upto: int) -> str:
-        return f"{self.table_dir}/compacted/upto={upto:012d}"
+    def _base_dir(self, upto: int) -> str:
+        return f"{self.table_dir}/data_base/upto={upto:012d}"
 
     def compact(
         self, spark: SparkSession, partition_exprs: dict[str, Column] | None = None
@@ -286,7 +260,7 @@ class MergeSink(CommitLog):
         for name, expr in (partition_exprs or {}).items():
             merged = merged.withColumn(name, expr)
         merged.write.mode("overwrite").partitionBy(*pcols).parquet(
-            self._compacted_dir(upto)
+            self._base_dir(upto)
         )
         return self._write_compaction_marker(
             upto,
@@ -297,23 +271,7 @@ class MergeSink(CommitLog):
         """Delete batch dirs folded into the latest base (and superseded
         bases).  Keeps every commit marker — exactly-once replay skips
         survive vacuum.  Returns the number of directories removed."""
-        comp = self.latest_compaction()
-        if comp is None:
-            return 0
-        upto = comp["upto"]
-        removed = 0
-        data = f"{self.table_dir}/data"
-        if os.path.isdir(data):
-            for name in os.listdir(data):
-                if name.startswith("batch=") and int(name.split("=")[1]) <= upto:
-                    shutil.rmtree(f"{data}/{name}")
-                    removed += 1
-        cbase = f"{self.table_dir}/compacted"
-        for name in os.listdir(cbase):
-            if name.startswith("upto=") and int(name.split("=")[1]) < upto:
-                shutil.rmtree(f"{cbase}/{name}")
-                removed += 1
-        return removed
+        return self._vacuum_tables(["data"])
 
     def read_base(self, spark: SparkSession) -> DataFrame:
         """The compacted base WITH its derived partition columns — the
@@ -326,5 +284,5 @@ class MergeSink(CommitLog):
         bsch = self._marker_schema(comp)
         if bsch is not None:
             rdr = rdr.schema(bsch)
-        return rdr.parquet(self._compacted_dir(comp["upto"]))
+        return rdr.parquet(self._base_dir(comp["upto"]))
 

@@ -31,7 +31,8 @@ stream == batch across a mid-stream restart.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from arion_spark.operators.rollup import spike_islands
@@ -48,42 +49,45 @@ class SpikeRollup(CommitLog):
 
     def __init__(self, table_dir: str, factor: float = 1.5):
         self.factor = factor
-        self.minute = MergeSink(
-            f"{table_dir}/minute", keys=("bucket_ts",), stats="minimal"
-        )
+        self.minute = MergeSink(f"{table_dir}/minute", keys=("bucket_ts",))
         self._init_commit_log(f"{table_dir}/spikes")
 
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        # 1. minute grain upsert (independently idempotent)
+    def process(
+        self, batch_df: DataFrame, batch_id: int, extra: dict | None = None
+    ) -> None:
+        # 1. minute grain upsert (independently idempotent), then the
+        #    snapshot commit (a replay no-op once committed)
         self.minute.process(batch_df, batch_id)
-        if self.is_committed(batch_id):
-            return  # snapshot replay no-op
+        super().process(batch_df, batch_id, extra)
+
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
         spark = batch_df.sparkSession
         prev = self._latest_snapshot(spark)
         m = self.minute.read_merged(spark).select("bucket_ts", "n_turns")
         cur = spike_islands(m, factor=self.factor)
-        state_dir = f"{self.table_dir}/state/batch={batch_id:012d}"
-        cur.write.mode("overwrite").parquet(state_dir)
-        cur = spark.read.schema(_SPIKES).parquet(state_dir)
         # alert lineage: islands in cur not identical in prev = new or
-        # grown/merged spikes this batch (tiny frames — exceptAll is fine)
-        n_cur = cur.count()
-        n_changed = (
-            n_cur if prev is None else cur.exceptAll(prev).count()
-        )
-        self._write_marker(
-            batch_id,
-            {
-                "batch_id": batch_id,
-                "n_spikes": n_cur,
-                "n_changed_spikes": n_changed,
-                # "schema" is uniformly StructType JSON across every
-                # sink's markers (MergeSink._marker_schema parses it);
-                # a DDL string here would be a latent JSONDecodeError
-                # trap for any shared marker reader
-                "schema": cur.schema.json(),
-            },
-        )
+        # grown/merged spikes this batch — flagged by a join against the
+        # (tiny) previous snapshot and counted by the snapshot write (an
+        # observation at the plan root always reports)
+        obs = None
+        if prev is not None:
+            obs = Observation()
+            cols = cur.columns
+            cur = (
+                cur.join(prev.withColumn("_prev", F.lit(True)), cols, "left")
+                .observe(obs, F.count_if(F.col("_prev").isNull()).alias("n"))
+                .select(*cols)
+            )
+        n_cur = self._write_table(cur, "state", batch_id)["rows"]
+        return {
+            "n_spikes": n_cur,
+            "n_changed_spikes": n_cur if obs is None else obs.get["n"],
+            # "schema" is uniformly StructType JSON across every
+            # sink's markers (MergeSink._marker_schema parses it);
+            # a DDL string here would be a latent JSONDecodeError
+            # trap for any shared marker reader
+            "schema": cur.schema.json(),
+        }
 
     def _latest_snapshot(self, spark: SparkSession) -> DataFrame | None:
         ids = self.committed_ids()
@@ -104,9 +108,6 @@ class SpikeRollup(CommitLog):
         """Per-batch alert lineage — what a pager hook would consume."""
         return self.lineage()
 
-    def foreach_batch(self):
-        return lambda df, bid: self.process(df, bid)
-
 
 def run_spike_stream(
     spark: SparkSession,
@@ -124,7 +125,7 @@ def run_spike_stream(
     det = SpikeRollup(out_dir, factor=factor)
     query = (
         minute.writeStream.outputMode("update")
-        .foreachBatch(det.foreach_batch())
+        .foreachBatch(det.process)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )

@@ -39,13 +39,17 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from arion_spark.functions.similarity import banded_srp_buckets_udf, cosine
-from arion_spark.streaming.commitlog import CommitLog
+from arion_spark.streaming.commitlog import (
+    CommitLog,
+    observe_count,
+    observed_count,
+)
 
 VEC_SCHEMA = T.StructType(
     [
@@ -87,7 +91,6 @@ class VecDedupGuard(CommitLog):
         n_bands: int = 32,
         n_planes: int = 12,
         n_bp: int = 256,
-        stats: str = "minimal",
     ):
         self.table_dir = table_dir
         self.dim = dim
@@ -95,9 +98,6 @@ class VecDedupGuard(CommitLog):
         self.n_bands = n_bands
         self.n_planes = n_planes
         self.n_bp = n_bp
-        # "full" counts the pruned history scan per batch (a second
-        # action over the probe I/O) — opt-in lineage, same as DedupGuard
-        self.stats = stats
         self._bucketer = banded_srp_buckets_udf(dim, n_bands, n_planes)
         self._init_commit_log(table_dir)
         # index layout (bucketing + prune granularity) is on-disk state.
@@ -144,19 +144,16 @@ class VecDedupGuard(CommitLog):
             F.col("id_b").alias("vec_id")
         )
 
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
         spark = batch_df.sparkSession
-        vecs_dir = f"{self.table_dir}/vecs/batch={batch_id:012d}"
-        bkt_dir = f"{self.table_dir}/buckets/batch={batch_id:012d}"
-        kept_dir = f"{self.table_dir}/kept/batch={batch_id:012d}"
-
-        batch_df.select(
-            "vec_id", F.col("embedding").alias("v")
-        ).write.mode("overwrite").parquet(vecs_dir)
-        b = spark.read.schema(_VECS).parquet(vecs_dir)
-        (
+        n_in = self._write_table(
+            batch_df.select("vec_id", F.col("embedding").alias("v")),
+            "vecs",
+            batch_id,
+        )["rows"]
+        b = spark.read.schema(_VECS).parquet(self._batch_dir("vecs", batch_id))
+        obs_bp = Observation()  # touched prune cells, seen by the write
+        self._write_table(
             b.select(
                 "vec_id",
                 F.posexplode(self._bucketer(F.col("v"))).alias("band", "bucket"),
@@ -165,11 +162,13 @@ class VecDedupGuard(CommitLog):
                 "bp",
                 F.pmod(F.xxhash64("band", "bucket"), F.lit(self.n_bp)).cast("int"),
             )
-            .sortWithinPartitions("bp")
-            .write.mode("overwrite")
-            .parquet(bkt_dir)
+            .observe(obs_bp, F.collect_set("bp").alias("bps"))
+            .sortWithinPartitions("bp"),
+            "buckets",
+            batch_id,
         )
-        bb = spark.read.schema(_BUCKETS).parquet(bkt_dir)
+        bps = sorted(obs_bp.get["bps"])
+        bb = spark.read.schema(_BUCKETS).parquet(self._batch_dir("buckets", batch_id))
 
         # within-batch: later vector rejected by any earlier batch vector
         pairs_in = (
@@ -184,20 +183,15 @@ class VecDedupGuard(CommitLog):
         rejected = self._verified_earlier_ids(pairs_in, b, b)
 
         ids = self.committed_ids()
-        n_probe_rows = None
-        n_probe_parts = 0
-        if ids:
-            bps = [r["bp"] for r in bb.select("bp").distinct().collect()]
-            n_probe_parts = len(bps)
+        if ids and bps:
             # base leg: touched-cell paths read directly (no per-batch
             # full-base listing); isin still prunes the incremental tail
             hist_b = self._read_committed(
                 spark, "buckets", ids, partition_filter={"bp": bps}
             ).where(F.col("bp").isin(bps))
-            if self.stats == "full":
-                n_probe_rows = hist_b.count()  # probe-scan size → lineage
+            probe, obs_probe = observe_count(hist_b)  # probe-scan size
             cand = (
-                hist_b.join(
+                probe.join(
                     F.broadcast(
                         bb.select("band", "bucket", F.col("vec_id").alias("id_b"))
                     ),
@@ -212,22 +206,17 @@ class VecDedupGuard(CommitLog):
             )
 
         kept = b.join(rejected.distinct(), "vec_id", "left_anti")
-        kept.write.mode("overwrite").parquet(kept_dir)
-
-        n_in = b.count()
-        n_kept = spark.read.schema(_VECS).parquet(kept_dir).count()
-        marker = {
-            "batch_id": batch_id,
+        n_kept = self._write_table(kept, "kept", batch_id)["rows"]
+        n_probe_rows = None  # no history yet
+        if ids:
+            n_probe_rows = observed_count(obs_probe, hist_b) if bps else 0
+        return {
             "n_in": n_in,
             "n_kept": n_kept,
             "n_dropped": n_in - n_kept,
             "n_probe_rows": n_probe_rows,
-            "n_probe_partitions": n_probe_parts,
+            "n_probe_partitions": len(bps) if ids else 0,
         }
-        self._write_marker(batch_id, marker)
-
-    def foreach_batch(self):
-        return lambda df, bid: self.process(df, bid)
 
     # -- read path ----------------------------------------------------------
 

@@ -144,7 +144,6 @@ def bench_streaming(spark, n_turns: int) -> dict:
             f"{work}/ckpt",
             watermark="10 minutes",
             max_files_per_trigger=8,
-            sink_stats="minimal",
         )
         query.processAllAvailable()
         query.stop()

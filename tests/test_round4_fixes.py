@@ -78,7 +78,7 @@ def test_sketch_sink_zero_row_state_readable(spark, tmp_path):
 def test_merge_sink_zero_row_only_log_readable(spark, tmp_path):
     """A log whose ONLY committed batch is zero-row must stay readable
     through every read path (merged / changes / as-of)."""
-    sink = MergeSink(str(tmp_path / "m"), stats="full")
+    sink = MergeSink(str(tmp_path / "m"))
     sink.process(spark.createDataFrame([], TRANSCRIPT_SCHEMA), 0)
     _strip_part_files(str(tmp_path / "m" / "data" / "batch=000000000000"))
     assert sink.read_merged(spark).count() == 0
@@ -171,7 +171,7 @@ def test_guard_probe_pruning_and_lineage(spark, tmp_path):
 
     rows = [(i, " ".join(f"w{i}x{j}" for j in range(30))) for i in range(40)]
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
-    g = DedupGuard(str(tmp_path / "g"), stats="full")
+    g = DedupGuard(str(tmp_path / "g"))
     g.process(corpus.where("doc_id < 20"), 0)
     g.process(corpus.where("doc_id >= 20"), 1)
     g.compact(spark)
@@ -210,9 +210,7 @@ def test_vec_guard_probe_pruning_and_lineage(spark, tmp_path):
 
     vecs = [(i, vec(i)) for i in range(40)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    g = VecDedupGuard(
-        str(tmp_path / "vg"), dim=dim, n_bands=4, n_planes=6, stats="full"
-    )
+    g = VecDedupGuard(str(tmp_path / "vg"), dim=dim, n_bands=4, n_planes=6)
     g.process(df.where("vec_id < 20"), 0)
     g.process(df.where("vec_id >= 20"), 1)
     g.compact(spark)

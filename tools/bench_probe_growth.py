@@ -51,7 +51,7 @@ def main(
 ):
     spark = get_spark("bench_probe_growth", cpus=8)
     work = tempfile.mkdtemp(prefix="probe_growth_")
-    guard = DedupGuard(f"{work}/guard", bp_len=bp_len, stats="full")
+    guard = DedupGuard(f"{work}/guard", bp_len=bp_len)
     bid = 0
     corpus = 0
     points = []

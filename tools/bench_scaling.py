@@ -151,7 +151,6 @@ def run_streaming(cpus: int, work: str) -> float:
         query, _sink = run_stream_pipeline(
             spark, _SPEC, f"{work}/replay", f"{out}/t_{rep}", f"{out}/c_{rep}",
             watermark="10 minutes", max_files_per_trigger=MFT,
-            sink_stats="minimal",
         )
         query.processAllAvailable()
         query.stop()
